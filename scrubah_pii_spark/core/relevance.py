@@ -8,8 +8,9 @@ From-scratch Python implementation of the scoring semantics in
   medical density          :216-229
   generation (recency)     :262-290
   score arithmetic/verdict :297-385
-This pure function is the F1>=0.99 oracle; the Spark-native column program in
-``functions/relevance_expr.py`` must agree with it exactly.
+This pure function is the F1>=0.99 oracle, and the fused per-doc UDF
+(``operators/scrub_op.py``) calls it directly, so batch and streaming labels
+are this function's output.
 """
 
 from __future__ import annotations

@@ -34,7 +34,6 @@ from .functions.hashing_expr import (
 )
 from .functions.langid_expr import langid_columns
 from .functions.quality_expr import char_count, quality_columns, word_count
-from .functions.relevance_expr import relevance_columns
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -153,9 +152,9 @@ FROM sc
 
 def q_relevance_label(spark, sf_dir):
     # Fused Arrow kernel (operators/scrub_op.py:make_relevance_metrics_udf) —
-    # same pure function as the flagship/oracle; replaces the ~125-term
-    # contains-expression program (functions/relevance_expr.py), the measured
-    # anti-scaling path (plans/pipeline.py:10-16).
+    # same pure function as the flagship/oracle; replaces a ~125-term
+    # contains-expression program, the measured anti-scaling path
+    # (plans/pipeline.py:10-16).
     from .operators.scrub_op import make_relevance_metrics_udf
 
     df = _spread(_docs(spark, sf_dir))

@@ -1,203 +1,11 @@
-"""Keep/drop relevance scoring as a native column program.
-
-The exact arithmetic of /root/reference/services/medicalRelevanceFilter.ts:
-297-385 (term tables :49-137) expressed with built-in functions only, so the
-hot path is JVM-side with whole-stage codegen — ~125 `contains` probes fold
-into one generated stage; no Python is involved per row.
-
-The big term programs are built as single F.expr() SQL strings (one parse)
-instead of per-term Column compositions — identical plans, ~100x faster
-client-side construction over py4j.
-
-Agrees exactly with core.relevance.relevance_score (cross-checked in tests;
-that pure function is also the DuckDB-oracle generator — see entry_queries).
-"""
+"""Recency generation as a native column; the relevance score itself is the
+pure kernel core.relevance.relevance_score, run inside the fused per-doc UDF
+(operators/scrub_op.py)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from ..core.relevance import (
-    CLINICAL_REFERENCES,
-    GARBAGE_INDICATORS,
-    REFERENCE_WEIGHTS,
-)
-
-_PLACEHOLDER_PATTERN = r"\[[A-Z_]+_\d+\]"
-
-
-def _sql_any(col: str, terms) -> Column:
-    return F.expr(" OR ".join(f"contains({col}, '{t}')" for t in terms))
-
-
-def _sql_refs(col: str) -> Column:
-    parts = []
-    for cat, terms in CLINICAL_REFERENCES.items():
-        w = REFERENCE_WEIGHTS[cat]
-        parts.extend(
-            f"(CASE WHEN contains({col}, '{t}') THEN {w} ELSE 0 END)" for t in terms
-        )
-    return F.expr(" + ".join(parts))
-
-
-def reference_count_expr(lower_text: Column) -> Column:
-    """Column-input variant (used by tests); int addition is order-free."""
-    total = F.lit(0)
-    for cat, terms in CLINICAL_REFERENCES.items():
-        w = REFERENCE_WEIGHTS[cat]
-        for t in terms:
-            total = total + F.when(lower_text.contains(t), w).otherwise(0)
-    return total
-
-
-def relevance_columns(text: Column, generation: Column) -> dict:
-    """All relevance columns from a text Column + generation Column.
-
-    Internally stages the lowercased text through a struct field so the
-    F.expr-based term programs can reference it by name exactly once."""
-    lt = F.lower(text)
-    refs = reference_count_expr(lt)
-    garbage = _any_on(lt, GARBAGE_INDICATORS)
-
-    non_ws = F.length(F.regexp_replace(text, r"\s+", ""))
-    ph_chars = F.length(text) - F.length(F.regexp_replace(text, _PLACEHOLDER_PATTERN, ""))
-    ph_density = (
-        F.when(F.length(text) == 0, F.lit(1.0))
-        .when(non_ws == 0, F.lit(1.0))
-        .otherwise(ph_chars.cast("double") / non_ws.cast("double"))
-    )
-
-    words = F.size(F.filter(F.split(text, r"\s+"), lambda w: F.length(w) > 0))
-    med_density = F.when(words > 0, F.least(F.lit(1.0), refs * 1.5 / words)).otherwise(
-        F.lit(0.0)
-    )
-
-    flags = {
-        "has_diagnoses": _any_on(lt, CLINICAL_REFERENCES["DIAGNOSES"]),
-        "has_procedures": _any_on(lt, CLINICAL_REFERENCES["PROCEDURES"]),
-        "has_outcomes": _any_on(lt, CLINICAL_REFERENCES["OUTCOMES"]),
-        "has_lab_data": _any_on(lt, CLINICAL_REFERENCES["LAB_VITALS"]),
-        "has_medications": _any_on(lt, CLINICAL_REFERENCES["TREATMENTS"]),
-    }
-
-    score = (
-        F.lit(50.0)
-        + F.when(ph_density > 0.6, -40.0)
-        .when(ph_density > 0.4, -25.0)
-        .when(ph_density > 0.2, -10.0)
-        .otherwise(0.0)
-        + med_density * 50
-        + F.least(F.lit(30), refs * 2).cast("double")
-        + F.when(flags["has_diagnoses"], 10.0).otherwise(0.0)
-        + F.when(flags["has_procedures"], 10.0).otherwise(0.0)
-        + F.when(flags["has_outcomes"], 15.0).otherwise(0.0)
-        + F.when(flags["has_lab_data"], 8.0).otherwise(0.0)
-        + F.when(flags["has_medications"], 7.0).otherwise(0.0)
-        + F.when(garbage, -50.0).otherwise(0.0)
-        + F.when(generation == 0, 10.0).when(generation == 1, 5.0).otherwise(0.0)
-    )
-    score = F.greatest(F.lit(0.0), F.least(F.lit(100.0), score))
-
-    recommendation = (
-        F.when(garbage, "discard")
-        .when(score >= 60, "keep")
-        .when(score >= 30, "demote")
-        .otherwise("discard")
-    )
-
-    return {
-        "clinical_references": refs,
-        "is_garbage_doc": garbage,
-        "placeholder_density": ph_density,
-        "medical_content_density": med_density,
-        **flags,
-        "relevance_score": score,
-        "recommendation": recommendation,
-    }
-
-
-# --- fast-path helpers: SQL-string programs over a staged `_lt` column -------
-
-_LT = "__relevance_lt__"
-
-
-def _any_on(lt: Column, terms) -> Column:
-    out = None
-    for t in terms:
-        c = lt.contains(t)
-        out = c if out is None else out | c
-    return out
-
-
-def add_relevance_columns(
-    df: DataFrame, text_col: str, generation_col: str = "generation",
-    prefix: str = "",
-) -> DataFrame:
-    """Fast path: stages lower(text) as a real column, then builds every term
-    probe as one F.expr parse referencing it by name. Identical results to
-    relevance_columns; linear-size plan; single-parse client build."""
-    df = df.withColumn(_LT, F.lower(F.col(text_col)))
-    text = F.col(text_col)
-
-    non_ws = F.length(F.regexp_replace(text, r"\s+", ""))
-    ph_chars = F.length(text) - F.length(F.regexp_replace(text, _PLACEHOLDER_PATTERN, ""))
-    ph_density = (
-        F.when(F.length(text) == 0, F.lit(1.0))
-        .when(non_ws == 0, F.lit(1.0))
-        .otherwise(ph_chars.cast("double") / non_ws.cast("double"))
-    )
-    words = F.size(F.filter(F.split(text, r"\s+"), lambda w: F.length(w) > 0))
-
-    df = df.withColumns(
-        {
-            prefix + "clinical_references": _sql_refs(_LT),
-            prefix + "is_garbage_doc": _sql_any(_LT, GARBAGE_INDICATORS),
-            prefix + "placeholder_density": ph_density,
-            prefix + "_words": words,
-            prefix + "has_diagnoses": _sql_any(_LT, CLINICAL_REFERENCES["DIAGNOSES"]),
-            prefix + "has_procedures": _sql_any(_LT, CLINICAL_REFERENCES["PROCEDURES"]),
-            prefix + "has_outcomes": _sql_any(_LT, CLINICAL_REFERENCES["OUTCOMES"]),
-            prefix + "has_lab_data": _sql_any(_LT, CLINICAL_REFERENCES["LAB_VITALS"]),
-            prefix + "has_medications": _sql_any(_LT, CLINICAL_REFERENCES["TREATMENTS"]),
-        }
-    ).withColumn(
-        prefix + "medical_content_density",
-        F.when(
-            F.col(prefix + "_words") > 0,
-            F.least(
-                F.lit(1.0),
-                F.col(prefix + "clinical_references") * 1.5 / F.col(prefix + "_words"),
-            ),
-        ).otherwise(F.lit(0.0)),
-    )
-    score = (
-        F.lit(50.0)
-        + F.when(F.col(prefix + "placeholder_density") > 0.6, -40.0)
-        .when(F.col(prefix + "placeholder_density") > 0.4, -25.0)
-        .when(F.col(prefix + "placeholder_density") > 0.2, -10.0)
-        .otherwise(0.0)
-        + F.col(prefix + "medical_content_density") * 50
-        + F.least(F.lit(30), F.col(prefix + "clinical_references") * 2).cast("double")
-        + F.when(F.col(prefix + "has_diagnoses"), 10.0).otherwise(0.0)
-        + F.when(F.col(prefix + "has_procedures"), 10.0).otherwise(0.0)
-        + F.when(F.col(prefix + "has_outcomes"), 15.0).otherwise(0.0)
-        + F.when(F.col(prefix + "has_lab_data"), 8.0).otherwise(0.0)
-        + F.when(F.col(prefix + "has_medications"), 7.0).otherwise(0.0)
-        + F.when(F.col(prefix + "is_garbage_doc"), -50.0).otherwise(0.0)
-        + F.when(F.col(generation_col) == 0, 10.0)
-        .when(F.col(generation_col) == 1, 5.0)
-        .otherwise(0.0)
-    )
-    score = F.greatest(F.lit(0.0), F.least(F.lit(100.0), score))
-    df = df.withColumn(prefix + "relevance_score", score).withColumn(
-        prefix + "recommendation",
-        F.when(F.col(prefix + "is_garbage_doc"), "discard")
-        .when(F.col(prefix + "relevance_score") >= 60, "keep")
-        .when(F.col(prefix + "relevance_score") >= 30, "demote")
-        .otherwise("discard"),
-    )
-    return df.drop(_LT, prefix + "_words")
 
 
 def generation_from_ts(warc_ts: Column, current_year: int) -> Column:

@@ -70,7 +70,7 @@ def label_stage(
     spark = df.sparkSession
 
     # -- extract (html -> text) is FUSED into the doc-features UDF (round 5):
-    # the previous standalone extract_text_udf stage was a second
+    # the previous standalone extract UDF stage was a second
     # ArrowEvalPython node whose JVM queue re-buffered every passthrough
     # column — pure memory traffic at 32 cores. The inputs are masked the
     # same way: rows that already carry text ship a NULL html across Arrow

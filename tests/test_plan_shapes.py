@@ -56,6 +56,46 @@ class TestLabelStage:
         assert c == {"Exchange": 1, "ArrowEvalPython": 1, "Window": 0}, c
 
 
+class TestStreamingPlan:
+    def test_one_arrow_node_per_micro_batch(self, spark, tmp_path):
+        """streaming_transform runs the batch label_stage, so a drained
+        micro-batch plan holds exactly ONE ArrowEvalPython (extract + scoring
+        + scrub in one Arrow round-trip). More means a second per-doc program
+        crept back into the streaming path."""
+        import datetime as dt
+
+        from scrubah_pii_spark.streaming.stream import (
+            WEBPAGES_SCHEMA, read_webpage_stream, streaming_transform,
+        )
+
+        inp = str(tmp_path / "in")
+        spark.createDataFrame(
+            [
+                (f"http://h{i % 3}.com/{i}", dt.datetime(2025, 6, 1),
+                 None if i % 2 else f"<p>page {i}</p>".encode(),
+                 f"text {i}" if i % 2 else None, "en")
+                for i in range(8)
+            ],
+            WEBPAGES_SCHEMA,
+        ).write.parquet(inp)
+        q = (
+            streaming_transform(read_webpage_stream(spark, inp))
+            .writeStream.format("memory").queryName("plan_shape_stream")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .outputMode("append").start()
+        )
+        try:
+            q.processAllAvailable()
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                q.explain()
+        finally:
+            q.stop()
+        plan = buf.getvalue()
+        assert "== Physical Plan ==" in plan, plan
+        assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
+
+
 class TestDedupFused:
     def test_three_exchanges_no_joins_no_arrow(self, spark):
         """dedup_verdicts_fused: exactly three exchanges — shuffle(hash)
@@ -276,7 +316,12 @@ class TestTemplateCorpusLazy:
         assert self._jobs_run(spark, construct) == 0
         # and the in-plan scalars produce the same corpus the collected
         # scalars did: every doc shares hdr/footer -> doc_count == 6
-        rows = built["corpus"].collect()
+        rows = []
+        # self-check: the counter must see the action's jobs, or the == 0
+        # above would hold vacuously
+        assert self._jobs_run(
+            spark, lambda: rows.extend(built["corpus"].collect())
+        ) > 0
         assert rows and all(r["doc_count"] == 6 for r in rows)
         assert all(r["template_type"] for r in rows)
 
@@ -296,7 +341,8 @@ class TestTemplateCorpusLazy:
             built["t"] = line_frequency_templates(df, "text", "url")
 
         assert self._jobs_run(spark, construct) == 0
-        rows = built["t"].collect()
+        rows = []
+        assert self._jobs_run(spark, lambda: rows.extend(built["t"].collect())) > 0
         assert [(r["trimmed"], r["doc_count"]) for r in rows] == [
             ("the same boilerplate line", 4)
         ]

@@ -7,7 +7,6 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from scrubah_pii_spark.streaming.stream import stateful_host_dedup
 
@@ -71,35 +70,29 @@ class TestStatefulHostDedup:
 
 class TestStreamingBatchEquivalence:
     """Round-4 verdict item 7: the SAME corpus through the Structured
-    Streaming path (streaming_transform: expression-program stages +
-    watermarked url dedup) and the batch path (label_stage: fused Arrow
-    kernel) must yield identical per-document labels. The two idempotency
-    mechanisms were separately tested; this pins the cross-path semantics."""
+    Streaming path (streaming_transform: watermarked url dedup + label_stage)
+    and the batch path (label_stage) must yield identical per-document
+    labels, generation included, over every crawl year. Html-only rows and a
+    null/null row make the fused extraction run under streaming too."""
 
     def test_same_corpus_same_labels(self, spark, tmp_path):
-        from scrubah_pii_spark.functions.relevance_expr import generation_from_ts
         from scrubah_pii_spark.plans.pipeline import label_stage
         from scrubah_pii_spark.sources.synth import generate_rows
         from scrubah_pii_spark.streaming.stream import streaming_transform
 
+        synth = generate_rows(120)
         rows = [
-            (r["url"], r["warc_ts"], None, r["text"], r["lang"])
-            for r in generate_rows(120)
+            # every third row arrives as html only: text comes from extraction
+            (r["url"], r["warc_ts"], r["html"], None, r["lang"]) if i % 3 == 0
+            else (r["url"], r["warc_ts"], None, r["text"], r["lang"])
+            for i, r in enumerate(synth)
         ]
+        rows.append(("http://null.example/0", synth[0]["warc_ts"], None, None, None))
         df = spark.createDataFrame(
             rows,
             "url string, warc_ts timestamp, html binary, text string, lang string",
         )
-        # streaming_transform pins generation=2; restrict the corpus to docs
-        # the batch path ALSO labels generation 2 so relevance is comparable
-        from scrubah_pii_spark.config import DEFAULT_PIPELINE_CONFIG
-        df = df.filter(
-            generation_from_ts(
-                F.col("warc_ts"),
-                DEFAULT_PIPELINE_CONFIG.relevance.current_year,
-            ) == 2
-        )
-        assert df.count() >= 40, "fixture must keep a meaningful corpus"
+        assert len({r[1].year for r in rows}) > 1, "fixture must span crawl years"
 
         inp = str(tmp_path / "in")
         df.write.mode("overwrite").parquet(inp)
@@ -131,8 +124,8 @@ class TestStreamingBatchEquivalence:
         def key(r):
             rd = lambda v: None if v is None else round(v, 6)
             return (
-                r["lang_pred"], rd(r["quality_score"]), r["gates_pass"],
-                r["scrubbed_text"], r["pii_count"],
+                r["generation"], r["lang_pred"], rd(r["quality_score"]),
+                r["gates_pass"], r["scrubbed_text"], r["pii_count"],
                 rd(r["relevance_score"]), r["recommendation"],
             )
 
