@@ -122,14 +122,6 @@ class PipelineConfig:
     # Disable only for single-consumer plans or when an external checkpoint
     # (plans.resume) already materializes the stage.
     eager_label_barrier: bool = True
-    # Size gate for the barrier (round-8 A/B, interleaved arms, identical
-    # rows): at bench scale the extra count() action costs 0.5-0.9 s while
-    # the double-compute it prevents is also tiny, so the barrier only fires
-    # when the measurable file-backed input is at least this many bytes.
-    # Inputs whose size cannot be determined (non-file sources, empty
-    # inputFiles) KEEP the barrier — the scale-safe default, and what every
-    # multi-million-doc campaign path resolves to on cluster storage.
-    barrier_min_input_bytes: int = 256 * 1024 * 1024
 
 
 DEFAULT_PIPELINE_CONFIG = PipelineConfig()

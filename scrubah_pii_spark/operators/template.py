@@ -39,7 +39,11 @@ def line_frequency_templates(
     driver count() (guide §1.4/§5.2): one action fewer per consumer, and the
     corpus scan overlaps the line stages inside the same job. `int(n * frac)`
     == floor(n * frac) for the non-negative product, so the in-plan threshold
-    is the same integer the collected one was."""
+    is the same integer the collected one was.
+
+    The result is lazy and carries the doc-count scan of `df`: a caller that
+    runs more than one action on it should persist `df` or the result, or
+    each action re-runs that scan."""
     scalars = df.agg(F.count("*").alias("_docs"))
     threshold = F.greatest(
         F.lit(min_docs).cast("long"),
@@ -159,7 +163,11 @@ def ngram_template_corpus(
     of docs), so it runs on the collected corpus like the reference does.
     Deviation (documented): the reference keeps the FIRST-seen doc's original
     lines as template content; we keep the min-by-url doc's (deterministic
-    under any partitioning)."""
+    under any partitioning).
+
+    With eliminate_overlaps=False the result stays lazy and carries the
+    doc-count scan of `df`: a caller that runs more than one action on it
+    should persist `df` or the result, or each action re-runs that scan."""
     corpus = _ngram_corpus_raw(
         df, text_col, url_col, min_size, max_size, threshold_frac, min_docs,
         fingerprints,

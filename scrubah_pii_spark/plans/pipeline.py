@@ -21,8 +21,11 @@ Scale design notes (100 TB / 1000 executors):
     exact-dup removal runs before the banded near-dup stage, and near-dup
     uses bucket-representative windows (no pair joins — a corpus that is one
     giant near-dup cluster costs the same as a unique corpus);
-  * output partitioned by crawl_date + bucketed url hash; per-partition
-    lineage + metrics tables feed the completed-partition manifest (resume).
+  * output partitioned by crawl_date (days(warc_ts)) and written with one
+    writer per date (sources.io.write_output rebalances on crawl_date);
+    url_bucket, a bucketed url hash, is an output column, not a partition
+    key. Per-partition lineage + metrics tables feed the completed-partition
+    manifest (resume).
 """
 
 from __future__ import annotations
@@ -186,41 +189,10 @@ def run_pipeline(
     # it, a single downstream action submits the verdict-build stage and the
     # join-probe stage concurrently and both compute the label UDF
     # (round-7 A/B at 2M x 4x8: 207.2 s lazy vs 149.0 s eager — the lazy
-    # "one action" run pays the label stage nearly twice). Round 8 adds the
-    # size gate (cfg.barrier_min_input_bytes): for small file-backed inputs
-    # the barrier's extra action costs more than the double-compute it
-    # prevents; unknown-size inputs keep the barrier.
-    if cfg.eager_label_barrier and (
-        _input_bytes(df) >= cfg.barrier_min_input_bytes
-    ):
+    # "one action" run pays the label stage nearly twice).
+    if cfg.eager_label_barrier:
         labeled.count()
     return finish_pipeline(labeled, cfg)
-
-
-def _input_bytes(df: DataFrame) -> int:
-    """Total size of the frame's file-backed input, or a huge sentinel when
-    it cannot be determined (non-file sources, remote schemes without a
-    cheap local stat) — 'unknown' must err toward KEEPING the barrier."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    unknown = 1 << 62
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return unknown
-    if not files:
-        return unknown
-    total = 0
-    for f in files:
-        parsed = urlparse(f)
-        if parsed.scheme not in ("file", ""):
-            return unknown
-        try:
-            total += os.path.getsize(unquote(parsed.path))
-        except OSError:
-            return unknown
-    return total
 
 
 def finish_pipeline(

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PIPELINE_CONFIG, PipelineConfig
-from ..sources.io import remaining_partitions, write_manifest
+from ..sources.io import remaining_partitions, write_manifest, write_output
 from .pipeline import PipelineResult, finish_pipeline, label_stage
 
 STAGE_TABLE = "stage1_labeled"
@@ -82,7 +82,6 @@ def label_stage_resumable(
     batches = [
         dates[i : i + batch_dates] for i in range(0, len(dates), batch_dates)
     ]
-    stage_path = os.path.join(warehouse, STAGE_TABLE)
     for bi, batch in enumerate(batches):
         if fail_after_batches is not None and bi >= fail_after_batches:
             raise RuntimeError(
@@ -92,7 +91,7 @@ def label_stage_resumable(
         labeled = label_stage(
             sub, cfg, use_crawl_lang, with_perplexity
         ).withColumn("crawl_date", F.to_date("warc_ts"))
-        labeled.write.mode("append").partitionBy("crawl_date").parquet(stage_path)
+        write_output(labeled, warehouse, STAGE_TABLE, mode="append")
         # commit AFTER the data write: the manifest is the source of truth
         write_manifest(
             spark.createDataFrame([(d,) for d in batch], "crawl_date date"),

@@ -7,6 +7,8 @@ ingestion path for continuously-arriving crawl data:
   readStream (parquet dir) -> watermark on warc_ts -> dropDuplicates(url)
   -> label_stage, the batch pipeline's per-doc stage (row-local, so it
      composes unchanged with a stream) -> leak check
+  -> rebalance on crawl_date (sources.io.cluster_by_partition: at most one
+     file per date per micro-batch)
   -> writeStream with checkpointLocation (exactly-once per micro-batch)
 
 Every label, generation included, is therefore the one the batch pipeline
@@ -26,6 +28,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_PIPELINE_CONFIG, PipelineConfig
 from ..operators.scrub_op import leak_check_expr
 from ..plans.pipeline import label_stage
+from ..sources.io import cluster_by_partition
 
 WEBPAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -126,7 +129,7 @@ def start_stream(
 ):
     out = streaming_transform(read_webpage_stream(spark, input_dir), cfg)
     return (
-        out.writeStream.format("parquet")
+        cluster_by_partition(out).writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .partitionBy("crawl_date")

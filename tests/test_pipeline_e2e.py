@@ -406,30 +406,3 @@ class TestResumeContract:
         with pytest.raises(FileNotFoundError, match="no committed label stage"):
             resume_pipeline(empty, wh)
 
-
-class TestBarrierSizeGate:
-    def test_input_bytes_unknown_for_memory_frames(self, spark):
-        """createDataFrame inputs have no files — the gate must report
-        'unknown' (huge sentinel) so the barrier STAYS on; skipping it on
-        unmeasurable inputs would silently reintroduce the 2M-doc
-        double-compute (round-7 finding) on cluster storage schemes."""
-        from scrubah_pii_spark.plans.pipeline import _input_bytes
-
-        df = spark.range(10).toDF("x")
-        assert _input_bytes(df) == 1 << 62
-
-    def test_input_bytes_matches_local_files(self, spark, tmp_path):
-        import os
-
-        from scrubah_pii_spark.plans.pipeline import _input_bytes
-
-        p = str(tmp_path / "t.parquet")
-        spark.range(1000).toDF("x").write.parquet(p)
-        back = spark.read.parquet(p)
-        real = sum(
-            os.path.getsize(os.path.join(p, f))
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        )
-        assert _input_bytes(back) == real
-        assert 0 < real < (1 << 62)

@@ -96,6 +96,91 @@ class TestStreamingPlan:
         assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
 
 
+# Top-down, the sink's key nodes: the write, the rebalance on the partition
+# key, the fused per-doc UDF and the round-robin exchange that balances it.
+SINK_NODES = (
+    ("write", r"\bInsertIntoHadoopFsRelationCommand\b"),
+    ("rebalance", r"Exchange hashpartitioning\(crawl_date#\d+, \d+\), "
+                  r"REBALANCE_PARTITIONS_BY_COL"),
+    ("arrow", r"\bArrowEvalPython\b"),
+    ("round_robin", r"Exchange RoundRobinPartitioning\("),
+)
+
+
+def sink_chain(plan):
+    """The SINK_NODES in a simple-mode plan tree, root first. An adaptive
+    plan is read up to its initial plan, so each node counts once."""
+    tree = plan.split("== Physical Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    return [
+        name
+        for line in tree.splitlines()
+        for name, pat in SINK_NODES
+        if re.search(pat, line)
+    ]
+
+
+class TestSinkOrder:
+    """Every partitioned sink rebalances on crawl_date ABOVE the fused UDF:
+    the Python stage keeps its round-robin balance, and the writer tasks get
+    whole dates. A rebalance below the UDF would hash the Python stage's
+    input by date (skewed tasks) and leave the writers unclustered."""
+
+    def test_batch_write(self, spark, webdocs, tmp_path):
+        from scrubah_pii_spark.plans.pipeline import label_stage
+        from scrubah_pii_spark.sources.io import with_partition_cols, write_output
+
+        store = spark._jsparkSession.sharedState().statusStore()
+        spark.conf.set("spark.sql.ui.explainMode", "simple")
+        try:
+            first = store.executionsCount()
+            write_output(
+                with_partition_cols(label_stage(webdocs, with_perplexity=False)),
+                str(tmp_path), "t",
+            )
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            execs = store.executionsList()
+            plans = [
+                execs.apply(i).physicalPlanDescription()
+                for i in range(first, execs.size())
+            ]
+        finally:
+            spark.conf.unset("spark.sql.ui.explainMode")
+        writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+        assert len(writes) == 1, plans
+        assert sink_chain(writes[0]) == [
+            "write", "rebalance", "arrow", "round_robin"
+        ], writes[0]
+
+    def test_stream_sink(self, spark, tmp_path):
+        """The micro-batch plan the parquet sink writes is rooted at the
+        rebalance."""
+        import datetime as dt
+
+        from scrubah_pii_spark.streaming.stream import WEBPAGES_SCHEMA, start_stream
+
+        inp = str(tmp_path / "in")
+        spark.createDataFrame(
+            [
+                (f"http://h{i % 3}.com/{i}", dt.datetime(2025, 6, 1 + i % 3),
+                 None, f"text {i}", "en")
+                for i in range(8)
+            ],
+            WEBPAGES_SCHEMA,
+        ).write.parquet(inp)
+        q = start_stream(spark, inp, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+        try:
+            q.processAllAvailable()
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                q.explain()
+        finally:
+            q.stop()
+        plan = buf.getvalue()
+        root = plan.split("== Physical Plan ==", 1)[1].strip().splitlines()[0]
+        assert re.search(SINK_NODES[1][1], root), plan
+        assert sink_chain(plan) == ["rebalance", "arrow", "round_robin"], plan
+
+
 class TestDedupFused:
     def test_three_exchanges_no_joins_no_arrow(self, spark):
         """dedup_verdicts_fused: exactly three exchanges — shuffle(hash)
