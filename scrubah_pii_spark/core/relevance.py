@@ -202,6 +202,7 @@ def relevance_score(
         score += 5
     score = max(0.0, min(100.0, score))
 
+    # keep >= 60, demote >= 30 (medicalRelevanceFilter.ts:353-368)
     if garbage:
         rec, reason = "discard", "Document identified as administrative/billing (no clinical value)"
     elif score >= 60:

@@ -6,6 +6,9 @@ the reference's deterministic regex path:
   PII_PATTERNS (regex, verbatim)  /root/reference/schemas/schemas.ts:1143-1154
   MRN_CONTEXT_KEYWORDS            /root/reference/schemas/schemas.ts:1159-1168
   NAME_LABELS                     /root/reference/schemas/schemas.ts:1052-1069
+  DEFAULT_SCRUB_CONFIG            schemas/schemas.ts:1094-1099 (regex and
+                                  context detection on, ML NER off — ML is
+                                  not byte-stable, so only the regex path runs)
 expectation fixtures ported from /root/reference/test/piiScrubber.test.ts and
 /root/reference/test/pii-leak.test.ts.
 

@@ -1712,7 +1712,7 @@ def q_pipeline_flagship(spark, sf_dir):
         F.col("text"),
         F.col("lang"),
     )
-    res = run_pipeline(df, with_perplexity=False)
+    res = run_pipeline(df)
     return res.output.select(
         "url", "scrubbed_text", "pii_count", "lang_pred",
         F.round("quality_score", 6).alias("quality_score"),

@@ -4,7 +4,9 @@ n-gram Jaccard.
 Reference semantics (what): contentHasher.effect.ts:240-301 (EXACT /
 NEAR_DUPLICATE >=0.95 / SAME_EVENT >=0.70 + same type + 72h / UNIQUE),
 timelineOrganizer.effect.ts:246-305 ("first previous wins"),
-compressionPipeline.effect.ts:189-227 (Jaccard >= 0.85 word sets).
+compressionPipeline.effect.ts:189-227 (Jaccard >= 0.85 word sets); the
+threshold defaults are defaultEmbeddingConfig (semanticDedup.ts:51-62) and
+defaultPipelineConfig (compressionPipeline.ts:74-99).
 
 Spark-first how (scale): the reference's O(n^2) vs-all-previous scans are
 replaced by

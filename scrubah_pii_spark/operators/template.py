@@ -6,7 +6,8 @@ Two tiers, mirroring the reference:
      once per doc; template iff present in >= max(2, floor(50% * docs)); strip.
   2. FNV-1a n-gram corpus (full path): templateDetection.effect.ts:143-312 —
      2..5-line n-gram windows, normalized, FNV-1a-64 hashed; template iff
-     distinct-doc count >= max(min_docs, 30% * docs).
+     distinct-doc count >= max(min_docs, 30% * docs); sizes and thresholds
+     default to defaultNGramConfig (templateDetection.ts:44-54).
 
 Spark shape: explode lines -> hash/group (map-side partial agg) -> tiny corpus
 DataFrame -> broadcast hash-join back -> array ops rebuild the stripped text.
@@ -281,7 +282,7 @@ def remove_overlapping_templates(corpus: DataFrame) -> DataFrame:
     if len(rows) > 100_000:
         raise ValueError(
             f"template corpus unexpectedly large (>{len(rows) - 1} rows) — "
-            "check template_threshold/min_docs_for_template"
+            "check threshold_frac/min_docs"
         )
     rows.sort(key=lambda r: (-r["ngram_size"], -r["doc_count"], r["hash"]))
     kept, used = [], []

@@ -15,7 +15,7 @@ Scale design notes (100 TB / 1000 executors):
     the same ones the correctness oracles use, so parity is by construction);
   * gates short-circuit INSIDE the batch: failed-quality/non-target-language
     docs skip the scrub cascade entirely;
-  * salted repartition on skewed hosts before the UDF evens executor load
+  * a round-robin repartition before the UDF evens executor load
     (Common-Crawl host skew; FIXTURES gives a few hosts ~30% of rows);
   * dedup shuffles on short keys (content_hash / simhash band bits);
     exact-dup removal runs before the banded near-dup stage, and near-dup
@@ -35,7 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_PIPELINE_CONFIG, PipelineConfig
+from ..config import DEFAULT_PIPELINE_CONFIG, PipelineConfig, ShapingConfig
 from ..functions.relevance_expr import generation_from_ts
 from ..functions.hashing_expr import doc_type_expr
 from ..operators.dedup import dedup_verdicts_fused
@@ -61,7 +61,6 @@ def label_stage(
     df: DataFrame,
     cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
     use_crawl_lang: bool = False,
-    with_perplexity: bool = True,
 ) -> DataFrame:
     """Per-document half of the pipeline: extract -> fused scoring/scrub ->
     gates -> doc typing. Every column is a row-local function of the input
@@ -102,23 +101,13 @@ def label_stage(
     # (host, salt) left 2-3x size skew across partitions (few hot keys over
     # N buckets) and a measured straggler tail (CPU decaying 91%->16% while
     # the last tasks drained). Host-salted partitioning
-    # (repartition(N, host, salt)) remains the right tool when a downstream
+    # (repartition(N, host, salt)) is the right tool only when a downstream
     # op is keyed BY host — none is here; dedup keys are content-based.
+    # Skipping the repartition on an evenly split input measured 2-3x
+    # slower at 4 executors: scan-fused UDF tasks lose the even sizes.
     df = df.withColumn("host", _host(F.col("url")))
-    if cfg.pre_repartition:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        if cfg.host_salted_repartition:
-            # skew-safe host co-location: hot hosts spread over salt_buckets
-            # partitions instead of one, cold hosts stay together
-            df = (
-                df.withColumn(
-                    "_salt", F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets))
-                )
-                .repartition(n_parts, "host", "_salt")
-                .drop("_salt")
-            )
-        else:
-            df = df.repartition(n_parts)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    df = df.repartition(n_parts)
 
     # -- fused per-doc Python stage: ONE Arrow round-trip computes quality,
     # langid, perplexity, repetition, (gated) scrub + simhash-of-scrubbed AND
@@ -169,10 +158,9 @@ def run_pipeline(
     df: DataFrame,
     cfg: PipelineConfig = DEFAULT_PIPELINE_CONFIG,
     use_crawl_lang: bool = False,
-    with_perplexity: bool = True,
 ) -> PipelineResult:
     """df: (url, warc_ts, html, text?, lang?) — the input-hint table."""
-    df = label_stage(df, cfg, use_crawl_lang, with_perplexity)
+    df = label_stage(df, cfg, use_crawl_lang)
 
     # Stage barrier: persist the fully-labeled frame. Two reasons:
     #  (1) dedup, output, metrics and lineage all consume it — without the
@@ -184,14 +172,13 @@ def run_pipeline(
     #      spills; plans.resume swaps it for a manifest-tracked parquet stage
     #      write, which is also the checkpoint-resume boundary).
     labeled = df.persist()
-    # Eager barrier (cfg.eager_label_barrier): populate the cache BEFORE the
-    # two independent consumer branches of finish_pipeline fan out. Without
-    # it, a single downstream action submits the verdict-build stage and the
-    # join-probe stage concurrently and both compute the label UDF
+    # Eager barrier: populate the cache BEFORE the two independent consumer
+    # branches of finish_pipeline fan out. persist() is lazy; without the
+    # count, a single downstream action submits the verdict-build stage and
+    # the join-probe stage concurrently and both compute the label UDF
     # (round-7 A/B at 2M x 4x8: 207.2 s lazy vs 149.0 s eager — the lazy
     # "one action" run pays the label stage nearly twice).
-    if cfg.eager_label_barrier:
-        labeled.count()
+    labeled.count()
     return finish_pipeline(labeled, cfg)
 
 
@@ -231,7 +218,7 @@ def finish_pipeline(
         "pii_leak", leak_check_expr(F.col("scrubbed_text"))
     )
 
-    output = with_partition_cols(survivors, url_buckets=cfg.url_buckets).select(
+    output = with_partition_cols(survivors).select(
         "url", "warc_ts", "crawl_date", "url_bucket", "host",
         "scrubbed_text", "replacements", "pii_count",
         "lang_pred", "quality_score", "log_ppl", "repetition_ratio",
@@ -260,7 +247,7 @@ def finish_pipeline(
     return PipelineResult(output=output, labeled=labeled, metrics=metrics)
 
 
-def shape_output(output: DataFrame, shaping) -> DataFrame:
+def shape_output(output: DataFrame, shaping: ShapingConfig) -> DataFrame:
     """Optional corpus-shaping on the pipeline output (ShapingConfig; both
     stages default off — schema is unchanged either way). Host cap first
     (bounds any one host's contribution), then the language quota (fixes
@@ -268,7 +255,7 @@ def shape_output(output: DataFrame, shaping) -> DataFrame:
     from ..operators.sampling import host_cap_topn, stratified_sample
 
     cols = output.columns  # joins reorder columns; restore at the end
-    if getattr(shaping, "host_cap_n", 0):
+    if shaping.host_cap_n:
         output = host_cap_topn(
             output,
             "host",
@@ -280,7 +267,7 @@ def shape_output(output: DataFrame, shaping) -> DataFrame:
             n=shaping.host_cap_n,
             id_col="url",
         ).drop("rank")
-    if getattr(shaping, "lang_cap", 0):
+    if shaping.lang_cap:
         sid = F.pmod(F.xxhash64("url", "warc_ts"), F.lit(2**31))
         output = (
             stratified_sample(

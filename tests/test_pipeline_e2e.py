@@ -311,45 +311,6 @@ class TestDedupAndLeaks:
         b = {r["url"]: r["scrubbed_text"] for r in result.output.collect()}
         assert a == b
 
-    def test_eager_label_barrier_same_output(self, webpages, result):
-        """eager_label_barrier is a materialization hint only (populate the
-        persist cache before finish_pipeline's two consumer branches fan
-        out); flipping it must not change a single output row. The default
-        fixture runs barrier-on; compare against barrier-off."""
-        import dataclasses
-
-        from scrubah_pii_spark.config import DEFAULT_PIPELINE_CONFIG
-
-        cfg = dataclasses.replace(
-            DEFAULT_PIPELINE_CONFIG, eager_label_barrier=False
-        )
-        lazy = run_pipeline(webpages, cfg=cfg)
-        a = {(r["url"], r["warc_ts"]): r["scrubbed_text"]
-             for r in lazy.output.select(
-                 "url", "warc_ts", "scrubbed_text").collect()}
-        b = {(r["url"], r["warc_ts"]): r["scrubbed_text"]
-             for r in result.output.select(
-                 "url", "warc_ts", "scrubbed_text").collect()}
-        assert a == b
-        lazy.labeled.unpersist()
-
-    def test_host_salted_repartition_same_output(self, webpages, result):
-        """The skew-safe host-salted pre-repartition (repartition on
-        (host, salt)) is a pure physical-layout choice — output identical
-        to the round-robin default."""
-        import dataclasses
-
-        from scrubah_pii_spark.config import DEFAULT_PIPELINE_CONFIG
-
-        cfg = dataclasses.replace(
-            DEFAULT_PIPELINE_CONFIG, host_salted_repartition=True
-        )
-        salted = run_pipeline(webpages, cfg=cfg)
-        a = {r["url"] for r in salted.output.select("url").collect()}
-        b = {r["url"] for r in result.output.select("url").collect()}
-        assert a == b
-        salted.labeled.unpersist()
-
 
 class TestResumeContract:
     """Round-4 ADVICE items: flag plumbing, (url, warc_ts) primary-key
@@ -358,26 +319,29 @@ class TestResumeContract:
     def test_resume_forwards_label_flags(
         self, spark, webpages, tmp_path_factory
     ):
-        """resume_pipeline(use_crawl_lang=..., with_perplexity=...) must
-        reproduce run_pipeline with the SAME flags — previously the resume
-        path silently labeled with defaults."""
+        """resume_pipeline(use_crawl_lang=...) must reproduce run_pipeline
+        with the SAME flag — previously the resume path silently labeled
+        with defaults."""
+        from scrubah_pii_spark.config import DEFAULT_PIPELINE_CONFIG
         from scrubah_pii_spark.plans.resume import resume_pipeline
 
         wh = str(tmp_path_factory.mktemp("warehouse_flags"))
-        res = resume_pipeline(
-            webpages, wh, use_crawl_lang=True, with_perplexity=False
-        )
-        ref = run_pipeline(
-            webpages, use_crawl_lang=True, with_perplexity=False
-        )
+        res = resume_pipeline(webpages, wh, use_crawl_lang=True)
+        ref = run_pipeline(webpages, use_crawl_lang=True)
         a = {(r["url"], r["warc_ts"]): r["scrubbed_text"]
              for r in res.output.collect()}
         b = {(r["url"], r["warc_ts"]): r["scrubbed_text"]
              for r in ref.output.collect()}
         assert a == b
-        # the flags must actually reach label_stage: with_perplexity=False
-        # drops the perplexity column from the labeled frame
-        assert "perplexity" not in res.labeled.columns
+        # the flag must actually reach label_stage: where the crawl lang and
+        # lang_pred disagree about the keep set, the gate follows crawl lang
+        keep = DEFAULT_PIPELINE_CONFIG.langid.keep_langs
+        split = [
+            r for r in res.labeled.select("lang", "lang_pred", "lang_keep").collect()
+            if (r["lang"] in keep) != (r["lang_pred"] in keep)
+        ]
+        assert split, "fixture has no row whose language gate depends on the source"
+        assert all(r["lang_keep"] == (r["lang"] in keep) for r in split)
         ref.labeled.unpersist()
 
     def test_validate_keys_rejects_duplicate_pk(
@@ -406,3 +370,54 @@ class TestResumeContract:
         with pytest.raises(FileNotFoundError, match="no committed label stage"):
             resume_pipeline(empty, wh)
 
+
+class TestConfigHonoured:
+    """Every PipelineConfig field label_stage reads changes its output
+    (scrub_mode and shaping are covered by test_effect_mode_flag and
+    tests/test_sampling.py)."""
+
+    @pytest.fixture(scope="class")
+    def small(self, webpages, synth_rows):
+        urls = [r["url"] for r in synth_rows[:60]]
+        return webpages.filter(F.col("url").isin(urls))
+
+    @pytest.fixture(scope="class")
+    def default_rows(self, small):
+        from scrubah_pii_spark.plans.pipeline import label_stage
+
+        return {r["url"]: r for r in label_stage(small).collect()}
+
+    @pytest.mark.parametrize("field", ["keep_langs", "ocr_min_quality", "current_year"])
+    def test_value_honoured(self, small, default_rows, field):
+        import dataclasses
+
+        from scrubah_pii_spark.config import DEFAULT_PIPELINE_CONFIG as D
+        from scrubah_pii_spark.plans.pipeline import label_stage
+
+        k = 3
+        cfg = {
+            "keep_langs": dataclasses.replace(
+                D, langid=dataclasses.replace(D.langid, keep_langs=("de",))
+            ),
+            "ocr_min_quality": dataclasses.replace(
+                D, quality=dataclasses.replace(D.quality, ocr_min_quality=1.01)
+            ),
+            "current_year": dataclasses.replace(
+                D, relevance=dataclasses.replace(
+                    D.relevance, current_year=D.relevance.current_year + k
+                )
+            ),
+        }[field]
+        rows = label_stage(small, cfg).collect()
+        assert len(rows) == len(default_rows) > 0
+        if field == "keep_langs":
+            assert any(r["lang_pred"] == "de" for r in rows)
+            assert all(r["lang_keep"] == (r["lang_pred"] == "de") for r in rows)
+        elif field == "ocr_min_quality":
+            assert any(r["gates_pass"] for r in default_rows.values())
+            assert not any(r["gates_pass"] for r in rows)
+        else:
+            assert all(
+                r["generation"] == default_rows[r["url"]]["generation"] + k
+                for r in rows
+            )

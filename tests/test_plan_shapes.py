@@ -50,7 +50,7 @@ class TestLabelStage:
         from scrubah_pii_spark.plans.pipeline import label_stage
 
         c = plan_counts(
-            label_stage(webdocs, with_perplexity=False),
+            label_stage(webdocs),
             "Exchange", "ArrowEvalPython", "Window",
         )
         assert c == {"Exchange": 1, "ArrowEvalPython": 1, "Window": 0}, c
@@ -134,7 +134,7 @@ class TestSinkOrder:
         try:
             first = store.executionsCount()
             write_output(
-                with_partition_cols(label_stage(webdocs, with_perplexity=False)),
+                with_partition_cols(label_stage(webdocs)),
                 str(tmp_path), "t",
             )
             spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()

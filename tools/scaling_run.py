@@ -149,80 +149,34 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    import dataclasses
-
-    from scrubah_pii_spark.config import DEFAULT_PIPELINE_CONFIG
+    from scrubah_pii_spark.config import PipelineConfig, ShapingConfig
     from scrubah_pii_spark.plans.pipeline import run_pipeline
-
-    # synthetic corpus is uniformly split (8 MB row groups): the round-robin
-    # repartition would only add a full-corpus shuffle that is free at 1
-    # executor (intra-process) but cross-JVM TCP at 4 — skewing the N-vs-4N
-    # comparison with a cost real clusters pay in NIC, not CPU
-    # measured (BENCH/scaling_matrix.jsonl): skipping the pre-UDF repartition
-    # SLOWS the 4-executor label stage 2-3x (scan-fused UDF tasks lose the
-    # even-sized-partition property); keep it on by default
-    pre_rep = os.environ.get("SCRUBAH_PRE_REPARTITION", "1") == "1"
-    # eager_label_barrier defaults False here: this runner controls
-    # materialization itself (SCRUBAH_ONE_ACTION arms the lazy vs barrier
-    # protocol below); the library default (True) would hide that A/B.
-    # SCRUBAH_EAGER_BARRIER=1 restores the shipped product path — one action
-    # with the label cache materialized before the dedup/survivor fan-out —
-    # which the r7 A/B measured ~38% faster than the lazy single action.
-    eager = os.environ.get("SCRUBAH_EAGER_BARRIER", "0") == "1"
-    cfg = dataclasses.replace(DEFAULT_PIPELINE_CONFIG, pre_repartition=pre_rep,
-                              eager_label_barrier=eager)
 
     # optional corpus-shaping leg (round-6: the shaping ops had never run at
     # campaign scale): SCRUBAH_SHAPING_HOST_CAP / SCRUBAH_SHAPING_LANG_CAP
     host_cap_n = int(os.environ.get("SCRUBAH_SHAPING_HOST_CAP", "0"))
     lang_cap = int(os.environ.get("SCRUBAH_SHAPING_LANG_CAP", "0"))
-    if host_cap_n or lang_cap:
-        from scrubah_pii_spark.config import ShapingConfig
-
-        cfg = dataclasses.replace(
-            cfg, shaping=ShapingConfig(host_cap_n=host_cap_n, lang_cap=lang_cap)
-        )
+    cfg = PipelineConfig(
+        shaping=ShapingConfig(host_cap_n=host_cap_n, lang_cap=lang_cap)
+    )
 
     df = spark.read.parquet(corpus)
     df.limit(64).count()  # warm-up: executor JVMs + Arrow init
 
-    # Timing protocol (round 6). one_action=1 (default): time the single
-    # user-facing action output.count(). persist() is lazy, NOT a stage
-    # barrier — in one action the cache is populated inside the dedup
-    # exchange-1 map stage, so the slim-projection shuffle WRITE overlaps the
-    # label UDF per-partition (the round-5 verdict's named residual was the
-    # barrier the old two-action instrumentation itself created: counting
-    # labeled first forces a full materialization job before dedup's first
-    # byte of shuffle). label_sec is then a post-hoc probe over the
-    # now-cached frame (cache-read cost only, NOT the old label_sec).
-    # one_action=0 restores the round-3..5 two-action split for comparison.
-    one_action = os.environ.get("SCRUBAH_ONE_ACTION", "1") == "1"
+    # run_pipeline materializes the persisted label stage itself (its eager
+    # barrier), so plan_sec is the label stage plus planning; the rest of
+    # wall_sec is dedup, leak check and shaping up to output.count().
     t0 = time.time()
     res = run_pipeline(df, cfg=cfg)
     t_plan = time.time() - t0
-    if one_action:
-        out_rows = res.output.count()
-        wall = time.time() - t0
-        t1 = time.time()
-        labeled_rows = res.labeled.count()  # cached: probe, not stage time
-        t_label_probe = time.time() - t1
-        t_label, t_dedup = None, None
-    else:
-        labeled_rows = res.labeled.count()
-        t_label = time.time() - t0
-        t1 = time.time()
-        out_rows = res.output.count()
-        t_dedup = time.time() - t1
-        wall = time.time() - t0
-        t_label_probe = None
+    out_rows = res.output.count()
+    wall = time.time() - t0
+    labeled_rows = res.labeled.count()  # cached: untimed
     res.labeled.unpersist()
     spark.stop()
 
     print(json.dumps({
         "mode": mode,
-        "one_action": one_action,
-        "eager_barrier": eager,
-        "pre_repartition": pre_rep,
         "shaping": {"host_cap_n": host_cap_n, "lang_cap": lang_cap},
         "executors": executors,
         "cores_per_executor": cores_each,
@@ -231,11 +185,6 @@ def main():
         "out_rows": out_rows,
         "wall_sec": round(wall, 2),
         "plan_sec": round(t_plan, 2),
-        "label_sec": round(t_label, 2) if t_label is not None else None,
-        "dedup_sec": round(t_dedup, 2) if t_dedup is not None else None,
-        "label_cache_probe_sec": (
-            round(t_label_probe, 2) if t_label_probe is not None else None
-        ),
         "docs_per_sec": round(labeled_rows / wall, 1),
     }))
 
